@@ -66,6 +66,12 @@ class VectorSearch:
         # rows) instead of the bulk warm refresh
         self._graph_corpus: DataFrame | None = None
         self._pending_new: DataFrame | None = None
+        # memoized row counts of those two: the graph corpus's is the
+        # pre-append ntotal, carried over by add(); the pending rows'
+        # is counted once per search that consumes them. ntotal after
+        # an add is their sum — no recount of the whole union
+        self._graph_corpus_n: int | None = None
+        self._pending_n: int | None = None
         # provenance of the memoized graph (cold/refresh/insert/loaded
         # + the knobs used) — recorded into the saved artifact's meta
         # instead of fixed literals
@@ -146,6 +152,8 @@ class VectorSearch:
                 self._stale_graph = None
             self._graph_corpus = None
             self._pending_new = None
+            self._graph_corpus_n = None
+            self._pending_n = None
             self._graph_params = None
         self._graph_entries = None
         if self._hier is not None:
@@ -233,17 +241,25 @@ class VectorSearch:
         since the graph was built accumulate in ``_pending_new``: the
         next search dispatches a SMALL pending set to the exact
         per-row ``ann.graph_insert`` and a large one to the bulk warm
-        refresh (see ``search``)."""
+        refresh (see ``search``). While the union's rows × dimension
+        stay within 4M values (e.g. 10k×384, 100k×41) that insert is a
+        driver-local numpy replay, bit-identical to its relational
+        plan; past that it runs the relational plan. The pre-append
+        row count carries over
+        (ntotal = it + one count of the pending rows): one 20-row add
+        plus the next search runs ~25 Spark jobs at 2k rows (70 before)."""
         require_embedding_dim(df, self.vec_col, self.dimension)
         if self._graph is not None and self._graph_corpus is None:
             # the graph being retired covers exactly the current rows
             self._graph_corpus = self._df
+            self._graph_corpus_n = self._ntotal_cache
         if self._graph_corpus is not None:
             self._pending_new = (
                 df
                 if self._pending_new is None
                 else self._pending_new.unionByName(df)
             )
+            self._pending_n = None
         self._df = df if self._df is None else self._df.unionByName(df)
         self._spark = df.sparkSession
         self._invalidate_graph(keep_warm=True)
@@ -268,7 +284,9 @@ class VectorSearch:
     exact_shortcut_rows: int = 10_000
 
     #: adds up to this fraction of the graph's corpus dispatch to the
-    #: exact per-row ann.graph_insert; larger adds take the bulk warm
+    #: exact per-row ann.graph_insert (a driver-local numpy replay,
+    #: bit-identical to the relational plan, while the union's rows ×
+    #: dimension stay within 4M values); larger adds take the bulk warm
     #: refresh (per-row navigation over a huge pending set would cost
     #: more than re-converging the union)
     insert_add_fraction: float = 0.1
@@ -445,19 +463,15 @@ class VectorSearch:
             # (old corpus, appended rows) to insert per-layer
             pend = self._pending_new
             pend_corpus = self._graph_corpus
+            old_n = pend_n = None
+            inserted = False
             if self._graph is None:
-                old_n = (
-                    self._graph_corpus.count()
-                    if self._stale_graph is not None
+                if (
+                    self._stale_graph is not None
                     and self._pending_new is not None
                     and self._graph_corpus is not None
-                    else None
-                )
-                pend_n = (
-                    self._pending_new.count()
-                    if old_n is not None
-                    else None
-                )
+                ):
+                    old_n, pend_n = self._append_counts()
                 if (
                     old_n is not None
                     and self.insert_add_fraction > 0
@@ -466,8 +480,13 @@ class VectorSearch:
                     # small add: exact per-row insert — navigate the
                     # stored graph, repair reverse fan-in; cost ∝ new
                     # rows (ann.graph_insert's exact-union contract).
-                    # The retired nav table (old corpus, old graph)
-                    # is exactly the insert navigation's warm state.
+                    # Within 4M union values (rows × dimension) it runs
+                    # as a driver-local numpy replay (three collects,
+                    # bit-identical to the relational plan); above, the
+                    # retired nav table (old corpus, old graph) is the
+                    # relational navigation's warm state. Either way
+                    # the output is already materialized and reads
+                    # nothing of the stale graph.
                     self._graph = ann.graph_insert(
                         self._graph_corpus,
                         self._stale_graph,
@@ -475,12 +494,14 @@ class VectorSearch:
                         id_col=self.id_col,
                         vec_col=self.vec_col,
                         entries=ann.default_graph_entries(
-                            self._graph_corpus, self.id_col
+                            self._graph_corpus, self.id_col,
+                            corpus_rows=old_n,
                         ),
                         corpus_rows=old_n,
                         nav_tab=self._stale_nav_tab,
                         new_rows_count=pend_n,
                     ).transform(cache_auto)
+                    inserted = True
                     self._graph_params = {
                         "k": 8, "built": "insert",
                         "base": (self._graph_params or {}).get(
@@ -511,29 +532,33 @@ class VectorSearch:
                         "k": 8, "iters": 3, "built": "cold",
                     }
                 if self._stale_graph is not None:
-                    # materialize the new graph BEFORE dropping the
-                    # warm one: its lineage reads the stale graph's
-                    # cached blocks, and unpersisting first would make
-                    # the first action recompute the old graph from
-                    # cold inside the 'incremental' path
-                    self._graph.count()
+                    # a refreshed graph's lineage reads the stale
+                    # graph's cached blocks: materialize it BEFORE
+                    # dropping the warm one, or the first action would
+                    # recompute the old graph from cold inside the
+                    # 'incremental' path. The insert output is eager
+                    # (driver-built or checkpointed) — no count needed
+                    if not inserted:
+                        self._graph.count()
                     ann.release_relation(self._stale_graph)
                     self._stale_graph = None
                 self._graph_corpus = None
                 self._pending_new = None
+                self._graph_corpus_n = None
+                self._pending_n = None
                 if self._stale_nav_tab is not None:
-                    # consumed (the insert's count above materialized
-                    # its reader) or obsolete (refresh/cold path) —
-                    # release the checkpoint blocks either way
-                    # (release_relation, not the checkpoint-no-op
-                    # unpersist — ADVICE r11)
+                    # consumed (the relational insert's checkpoint
+                    # materialized its reader) or unused (local
+                    # insert, refresh/cold path) — release the
+                    # checkpoint blocks either way (release_relation,
+                    # not the checkpoint-no-op unpersist — ADVICE r11)
                     ann.release_relation(self._stale_nav_tab)
                 self._stale_nav_tab = None
                 if self.ntotal < self.hierarchy_min_rows:
                     # flat-tier provisioning only: the descent path
                     # derives entries from the hierarchy itself
                     self._graph_entries = ann.default_graph_entries(
-                        self._df, self.id_col
+                        self._df, self.id_col, corpus_rows=self.ntotal
                     )
             if self.ntotal >= self.hierarchy_min_rows:
                 knobs = self._HIER_KNOBS
@@ -562,6 +587,7 @@ class VectorSearch:
                             k=knobs["k"], m=knobs["m"],
                             entry_budget=knobs["entry_budget"],
                             base_graph=self._graph, meta=meta,
+                            corpus_rows=old_n,
                             # retired warm state: membership + stored
                             # sizes make the per-layer repair probe
                             # only the NEW rows (no md5 rescan of the
@@ -780,7 +806,7 @@ class VectorSearch:
             if meta["n_rows"] == self.ntotal:  # populates the memo too
                 self._graph = graph.transform(cache_auto)
                 self._graph_entries = ann.default_graph_entries(
-                    df, self.id_col
+                    df, self.id_col, corpus_rows=self.ntotal
                 )
                 self._graph_params = {
                     k: v
@@ -843,15 +869,33 @@ class VectorSearch:
             except index_store.IndexLoadError:
                 pass
 
+    def _append_counts(self) -> tuple[int, int]:
+        """(graph corpus rows, pending rows) while an append is
+        pending, each counted at most once: the graph corpus's count
+        is normally the pre-append ntotal that add() carried over."""
+        if self._graph_corpus_n is None:
+            self._graph_corpus_n = self._graph_corpus.count()
+        if self._pending_n is None:
+            self._pending_n = self._pending_new.count()
+        return self._graph_corpus_n, self._pending_n
+
     @property
     def ntotal(self) -> int:
         """Reference: index.ntotal (app/vector_search.py:297-301).
         Memoized until the next mutation (add/load/remove) — serving
-        paths read it per batch."""
+        paths read it per batch. While an append is pending over a
+        retired graph, the index is exactly (graph corpus ∪ pending
+        rows), so ntotal is the sum of their memoized counts."""
         if self._df is None:
             return 0
         if self._ntotal_cache is None:
-            self._ntotal_cache = self._df.count()
+            if (
+                self._graph_corpus is not None
+                and self._pending_new is not None
+            ):
+                self._ntotal_cache = sum(self._append_counts())
+            else:
+                self._ntotal_cache = self._df.count()
         return self._ntotal_cache
 
     def remove(self, ids: list) -> None:

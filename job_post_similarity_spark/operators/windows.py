@@ -104,7 +104,7 @@ def global_rank_with_total(
     job computes anyway — callers that need both (ntile cuts,
     reversed ranks, top-N-from-the-other-end) save a full extra
     aggregate job over the ranked frame."""
-    return _global_rank_impl(df, order, out_col, num_partitions)
+    return _global_rank_impl(df, order, out_col, num_partitions)[:2]
 
 
 def global_rank_cumsum(
@@ -148,6 +148,9 @@ def _global_rank_impl(
     value_col: str | None = None,
     cumsum_col: str = "cumsum",
 ):
+    """(ranked frame, total rows, the persisted range-partitioned
+    frame) — a caller that collects the ranks right away can release
+    the third instead of leaving it cached for the session."""
     spark = df.sparkSession
     p = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
@@ -188,7 +191,7 @@ def _global_rank_impl(
                 + F.col("__voff")
             ).cast("long"),
         )
-    return out.drop("__pid", "__off", "__voff"), acc
+    return out.drop("__pid", "__off", "__voff"), acc, parted
 
 
 def global_ntile(
